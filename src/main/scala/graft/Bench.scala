@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark main (driver contract): runs every SparkEntry query on
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line with per-query seconds.
   *
@@ -39,44 +37,15 @@ object Bench {
     }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      // let CACHED plans participate in AQE partition coalescing
-      // (default false pins a cached plan's map-side partitioning):
-      // graft operators persist narrow delta-sized intermediates —
-      // shingle sets, band rows, fixpoint labels — that dozens of
-      // downstream jobs rescan, and with the default every such job
-      // pays one task per ambient shuffle partition even when the
-      // cached delta is KB-sized. Size-based coalescing is the
-      // scale-correct rule at any tier (guide §2.2/§2.4); measured
-      // −40% total task count on q_stream_cc, −34% q_incremental_cc.
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // prefer shuffled-hash join when the planner's size conditions
-      // allow (guide §3.1) — measured r19 full-catalog A/B on one host:
-      // 196.9s with vs 216.9s without (3-pass-min totals; join-heavy
-      // movers q_fuzzy_lookup 3.05→3.86, q_knn_ann 1.09→1.47,
-      // q_dedup_clusters 4.24→4.91 without it). Build sides stay
-      // bounded at scale: the flag only ENABLES the planner's
-      // canBuildLocalHashMap choice (per-partition plan size under
-      // autoBroadcastJoinThreshold × shuffle.partitions), it never
-      // forces a hash build. Mirrored in Verify and every tool/test
-      // session so the oracle validates the same plans the bench times.
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build(cpus)
 
     val warmDir = "/root/testdata/sf0.001"
     SparkEntry.queries
       .filter { case (n, _) => subset.forall(_(n)) }
-      .foreach { case (_, fn) =>
+      .foreach { case (name, fn) =>
         try graft.tools.Exec.materialize(fn(spark, warmDir))
-        catch { case _: Throwable => () }
+        catch { case e: Throwable =>
+          graft.tools.Exec.logFailure("bench", s"warm-up $name", e) }
         CacheScope.release()
         spark.catalog.clearCache()
       }
@@ -173,9 +142,10 @@ object Bench {
     // per-query regression gate (VERDICT r17 item 5): the 2× wall gate
     // vs the r1 47-query run dilutes as the catalog grows, so each
     // query is also held to its OWN frozen baseline —
-    // BENCH_BASELINE.json records the BENCH_LOCAL_r17 per-query
-    // medians, and any query whose steal-resistant MIN exceeds 2× its
-    // frozen median lands in `regressions` (with both numbers).
+    // BENCH_BASELINE.json records the BENCH_r18 per-query medians,
+    // measured on the host that ran BENCH_r18 (refreshed in r19; see
+    // its `note`), and any query whose steal-resistant MIN exceeds 2×
+    // its frozen median lands in `regressions` (with both numbers).
     // Queries newer than the freeze are reported under
     // `baseline_missing` so additions are visible, never silently
     // ungated. Applied only at the baseline's own sf.
@@ -210,7 +180,8 @@ object Bench {
       s""""baseline_missing":$missJson,"extras":$extrasJson,"sf":"$sfDir"}"""
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("target/bench.json"), full + "\n")
-    catch { case _: Throwable => () }
+    catch { case e: Throwable =>
+      graft.tools.Exec.logFailure("bench", "write target/bench.json", e) }
     println(full)
     println(s"""{"metric":"total","value":$total,"unit":"sec","passes":$Passes,"n":${best.size},"errors":$errJson,"flaky":$flakyJson,"regressions":$regrJson,"sf":"$sfDir"}""")
     spark.stop()

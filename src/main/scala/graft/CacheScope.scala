@@ -96,6 +96,19 @@ object CacheScope {
     }
   }
 
+  /** Free the blocks behind a [[localCheckpointTruncated]] result; the
+    * frame must not be read afterwards. `Dataset.unpersist` frees
+    * nothing here: the checkpoint never entered the cache manager, its
+    * blocks belong to the locally checkpointed RDD that the frame's
+    * `LogicalRDD` scans.
+    */
+  private[graft] def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical.foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
   private val cpLock = new Object
   // per-SparkSession (nesting depth, saved ambient value); entries are
   // removed when the last nested call leaves, so the map never retains

@@ -600,46 +600,61 @@ object TxTable {
         out += Entry(relPath, part, size = st.getLen)
       }
     }
-    // commit-time stats collection (footer-only reads, bounded by THIS
-    // commit's file count — see FileStats scaladoc for the 100 TB
-    // story). Footers are independent metadata reads: a serial loop
-    // pays file-open latency × file count on the driver (a bucket(16)
-    // commit = 16 round-trips), so read them through a small bounded
-    // pool — same work, wall-clock ∝ ceil(files / pool) instead of
-    // files.
-    val conf = spark.sparkContext.hadoopConfiguration
-    val entries = out.toSeq
+    footerStats(spark.sparkContext.hadoopConfiguration, root, out.toSeq,
+      FooterStatsTimeout)
+  }
+
+  // BOUNDED wait: a hung filesystem read must fail the commit loudly,
+  // not hang it forever. 10 minutes is orders of magnitude above any
+  // healthy footer read (metadata I/O, ~ms each, ≤16 in flight) —
+  // hitting it means the filesystem is sick and the commit should
+  // surface that.
+  private val FooterStatsTimeout =
+    scala.concurrent.duration.Duration(10, "min")
+
+  /** `entries` with commit-time stats attached (footer-only reads,
+    * bounded by THIS commit's file count — see FileStats scaladoc for
+    * the 100 TB story). Footers are independent metadata reads: a
+    * serial loop pays file-open latency × file count on the driver (a
+    * bucket(16) commit = 16 round-trips), so read them through a small
+    * bounded pool — same work, wall-clock ∝ ceil(files / pool) instead
+    * of files. The pool's threads are daemons and are interrupted when
+    * the reads overrun `timeout`, so a hung read cannot keep the JVM
+    * alive after the commit has already failed.
+    */
+  private[sources] def footerStats(
+      conf: org.apache.hadoop.conf.Configuration, root: String,
+      entries: Seq[Entry],
+      timeout: scala.concurrent.duration.FiniteDuration): Seq[Entry] =
     if (entries.isEmpty) entries
     else {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, entries.size))
+        math.min(16, entries.size), { (r: Runnable) =>
+          val t = new Thread(r, "graft-footer-stats")
+          t.setDaemon(true)
+          t
+        })
       try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutor(pool)
-        // BOUNDED wait (VERDICT r18 item 9): a hung filesystem read must
-        // fail the commit loudly, not hang it forever. 10 minutes is
-        // orders of magnitude above any healthy footer read (metadata
-        // I/O, ~ms each, ≤16 in flight) — hitting it means the
-        // filesystem is sick and the commit should surface that.
-        try Await.result(
-          Future.traverse(entries) { e => Future {
-            val stats = scala.util.Try(
-              FileStats.encode(
-                FileStats.forFile(conf, new Path(s"$root/${e.relPath}"))))
-              .getOrElse("")
-            e.copy(stats = stats)
-          }},
-          scala.concurrent.duration.Duration(10, "min"))
-        catch { case _: java.util.concurrent.TimeoutException =>
+        import scala.jdk.CollectionConverters._
+        val reads = entries.map { e =>
+          ((() => e.copy(stats = scala.util.Try(FileStats.encode(
+            FileStats.forFile(conf, new Path(s"$root/${e.relPath}"))))
+            .getOrElse(""))): java.util.concurrent.Callable[Entry])
+        }
+        // invokeAll cancels (interrupts) every read still running at
+        // the deadline
+        val done = pool.invokeAll(reads.asJava, timeout.length, timeout.unit)
+          .asScala.toSeq
+        if (done.exists(_.isCancelled)) {
+          pool.shutdownNow()
           throw new java.io.IOException(
             s"TxTable commit: footer-stats reads for ${entries.size} " +
-              s"files under $root did not complete within 10 minutes — " +
+              s"files under $root did not complete within $timeout — " +
               "filesystem metadata reads are hung; failing the commit")
         }
+        done.map(_.get)
       } finally pool.shutdown()
     }
-  }
 
   /** The single commit point: EXCLUSIVE-create `v<next>.manifest` and
     * write its content directly. `FileSystem.create(path,

@@ -39,4 +39,14 @@ object Exec {
     RunMetrics.harvestQe(qe)
     n
   }
+
+  /** One stderr line for a failure a harness loop survives and goes
+    * on from: `[tag] what failed: <exception class>: <first message
+    * line>`. Stdout (the harness's JSON contract) is left untouched.
+    */
+  def logFailure(tag: String, what: String, e: Throwable): Unit = {
+    val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption())
+      .getOrElse("")
+    System.err.println(s"[$tag] $what failed: ${e.getClass.getName}: $msg")
+  }
 }

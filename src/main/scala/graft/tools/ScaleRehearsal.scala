@@ -1148,21 +1148,7 @@ object ScaleRehearsal {
     def picked(family: Seq[String]): Seq[String] =
       family.filter(n => subset.forall(_(n)))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
-        "true")
-      // mirror Bench: the timed harness prefers shuffled-hash joins
-      // (guide §3.1, r19 A/B in Bench.scala) — every session must plan
-      // the same way so correctness runs validate the timed plans
-      .config("spark.sql.join.preferSortMergeJoin", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session.build(cpus)
 
     val sf01 = "/root/testdata/sf0.1"
     val sf1 = "target/sf1"
@@ -1174,7 +1160,8 @@ object ScaleRehearsal {
     (picked(Family) ++ picked(Family100)).distinct.foreach { name =>
       try graft.tools.Exec.materialize(
         queryOf(name)(spark, "/root/testdata/sf0.001"))
-      catch { case _: Throwable => () }
+      catch { case e: Throwable =>
+        graft.tools.Exec.logFailure("scale", s"warm-up $name", e) }
       CacheScope.release(); spark.catalog.clearCache()
     }
     // trigger the prep-bearing entries' one-time builds (stored
@@ -1194,7 +1181,8 @@ object ScaleRehearsal {
         Seq((n, sf01), (n, sf10)))
     prepRuns.distinct.foreach { case (name, dir) =>
       try graft.tools.Exec.materialize(queryOf(name)(spark, dir))
-      catch { case _: Throwable => () }
+      catch { case e: Throwable =>
+        graft.tools.Exec.logFailure("scale", s"prep $name at $dir", e) }
       CacheScope.release(); spark.catalog.clearCache()
     }
 

@@ -408,6 +408,21 @@ class DedupSpec extends SparkSpec {
     assert(shuffled.contains((1L, 3L)), "identical docs survive pruning")
   }
 
+  test("jaccardPairsPruned never pairs a repeated id with itself") {
+    // id 1 appears twice: its grams list [1, 1, 2] under the gram
+    // aggregation, which must still emit only strict d1 < d2 pairs
+    val docs = Seq(
+      (1L, "alpha beta gamma delta epsilon"),
+      (1L, "alpha beta gamma delta epsilon"),
+      (2L, "alpha beta gamma delta epsilon"),
+      (3L, "unrelated words in another document")
+    ).toDF("doc_id", "text")
+    val pairs = Dedup.jaccardPairsPruned(docs, "doc_id", "text", 3, 0.1, 10)
+      .select("d1", "d2").as[(Long, Long)].collect().toSet
+    assert(pairs.forall { case (a, b) => a < b }, s"non-strict pair in $pairs")
+    assert(pairs.contains((1L, 2L)))
+  }
+
   private def encodePng(img: java.awt.image.BufferedImage): Array[Byte] = {
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.setUseCache(false)

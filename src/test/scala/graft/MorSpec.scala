@@ -272,6 +272,23 @@ class MorSpec extends SparkSpec {
     assert(cdf.forall { case (k, v, _) => v == k * 1.5 + k })
   }
 
+  test("updateWhere and mergeInto free the blocks they checkpoint") {
+    def persisted = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    val root = freshRoot("cpfree")
+    TxTable.create(seed, root, Some("p"))
+    val beforeUpd = persisted
+    MergeOnRead.updateWhere(spark, root,
+      expr("k % 10 = 3"), Seq("v" -> expr("v + k")))
+    assert((persisted -- beforeUpd).isEmpty,
+      "updateWhere left its checkpointed RDD persisted")
+    val src = (96L to 105L).map(k => (k, "odd", k * 10.0)).toDF("k", "p", "v")
+    val beforeMrg = persisted
+    MergeOnRead.mergeInto(spark, root, src, Seq("k"),
+      matchedSets = Some(Seq("v" -> expr("src.v"))))
+    assert((persisted -- beforeMrg).isEmpty,
+      "mergeInto left its checkpointed RDD persisted")
+  }
+
   test("updateWhere keeps bucket placement and CHECKs; CALL surface works") {
     val wh = freshRoot("updwh")
     spark.conf.set("spark.sql.catalog.gmu", "graft.sources.GraftCatalog")
